@@ -52,6 +52,23 @@ def test_registration_order_head_is_stable():
     assert names[-1] == "dedup_simhash_pairs_auto2"
 
 
+def test_registration_order_prefix_is_pinned():
+    """The whole registration order, not just its head, is pinned: the
+    sha256 of the first 338 names (the registry at r20). A prefix, so
+    appending a query stays legal; any reorder or removal fails."""
+    import hashlib
+
+    from datalake_imagenes_georreferenciadas_spark.plans.queries import ORACLES, QUERIES
+
+    names = list(QUERIES)
+    assert len(names) >= 338
+    digest = hashlib.sha256("\n".join(names[:338]).encode()).hexdigest()
+    assert digest == (
+        "41d74d06f4670eb462ce69ff86a7ab989189c8c1e7785e6680badae26bf748e8"
+    )
+    assert list(ORACLES) == names
+
+
 def test_every_segment_registers_queries():
     import importlib
 
