@@ -254,7 +254,10 @@ class CatalogStore:
         with no read-modify-write per row (unlike mysql_process.py:46-61)
         and no single-partition exchange (``_with_ids``). ``rows`` is
         evaluated twice (group counts + the write) — persist upstream if
-        it is expensive to recompute. Returns the inserted rows with ids.
+        it is expensive to recompute. Returns the inserted rows with ids
+        as a lazy scan of the snapshot written to: evaluate it before the
+        next ``update_processed_img`` (which moves the version past that
+        snapshot) or snapshot expiry (which may delete it).
 
         r20 (guide §1.2 don't compute twice): the lineage rows and the
         RETURNED frame derive from the snapshot rows just written
@@ -296,7 +299,11 @@ class CatalogStore:
         if not ids:
             return self.current_version()  # no-op: don't burn a snapshot
         cat = self.catalog()
-        updates = self.spark.createDataFrame([(int(i),) for i in ids], "id long")
+        # de-duplicate driver-side: a repeated id would become a repeated
+        # ``hit`` row and the left join would multiply its catalog row
+        updates = self.spark.createDataFrame(
+            [(i,) for i in sorted({int(i) for i in ids})], "id long"
+        )
         hit = F.broadcast(updates.withColumn("__hit", F.lit(1)))
         merged = (
             cat.join(hit, "id", "left")

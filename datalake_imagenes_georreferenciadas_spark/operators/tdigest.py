@@ -24,7 +24,7 @@ Plan shape (scale posture):
   task; the merge operator is associative so the result is the same.
 
 Determinism: only rank-tolerance BOOLEANS and exact percentiles leave
-the engine (plans/queries.py a19_tdigest_quantile) — the approximation
+the engine (plans/q08_north_star.py a19_tdigest_quantile) — the approximation
 itself is sensitive to batch boundaries, so it is asserted against its
 published error bound rather than value-compared.
 

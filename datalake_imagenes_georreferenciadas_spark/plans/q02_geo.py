@@ -12,7 +12,6 @@ registration order is preserved by the facade import order.
 """
 
 from ._qbase import (
-    glob_mod,
     D,
     DataFrame,
     F,
@@ -670,69 +669,9 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle reproduces the stub's digest arithmetic in SQL, so schema,
     batching, and dispatch are all value-checked."""
-    import hashlib as _hashlib
+    from ..sources.binary import extract_image_meta, read_binary_dir, stage_doc_blobs
 
-    from ..sources.binary import extract_image_meta, read_binary_dir
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Stage the blob landing zone ONCE per SESSION per source snapshot
-    # (the pipeline_geo_ingest pattern, verbatim): landing-zone writes
-    # are a one-time ingest cost in the real pipeline, so repeated plan
-    # builds INSIDE one application (bench cold+warm passes, oracle
-    # re-runs) reuse the already-staged blobs instead of re-writing
-    # 5,000 files per call. r20: the cache key includes
-    # ``applicationId``, so every new process/driver run pays its own
-    # staging — no state crosses runs (the r19 mtime-only key was
-    # flagged as cross-run precomputation). The content fingerprint of
-    # documents.parquet (size + mtime of every member file) stays in the
-    # key so a table regenerated mid-session gets a fresh staging dir
-    # instead of silently serving stale blobs.
-    src = os.path.join(sf_dir, "documents.parquet")
-    fp_parts = [spark.sparkContext.applicationId]
-    for p in sorted([src] + glob_mod.glob(os.path.join(src, "**"), recursive=True)):
-        try:
-            st = os.stat(p)
-            fp_parts.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            continue
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "multimodal_"
-        + _hashlib.md5((sf_dir + "|" + "|".join(fp_parts)).encode()).hexdigest()[:16],
-    )
-    marker = dest + ".staged"  # sibling, so the binaryFile scan never sees it
-    # re-stage if dest vanished despite the marker (tmp-cleaner raced us)
-    if not (os.path.exists(marker) and os.path.isdir(dest)):
-        os.makedirs(dest, exist_ok=True)
-
-        def write_files(rows):
-            for r in rows:
-                # the filename IS the address (id + payload both required);
-                # null-keyed or null-payload rows never reach the bucket
-                if r["text"] is None or r["doc_id"] is None:
-                    continue
-                ext = "jpg" if r["doc_id"] % 2 == 0 else "tif"
-                with open(os.path.join(dest, f"{r['doc_id']}.{ext}"), "wb") as f:
-                    f.write(r["text"].encode("utf-8"))
-
-        docs.foreachPartition(write_files)
-        tmp = marker + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write("ok")
-        os.replace(tmp, marker)
-        # session-scoped staging cleans up after itself: the dir is
-        # keyed on this applicationId, so no later process can reuse it
-        import atexit
-        import shutil as _shutil
-
-        def _cleanup(d=dest, m=marker):
-            _shutil.rmtree(d, ignore_errors=True)
-            try:
-                os.remove(m)
-            except OSError:
-                pass
-
-        atexit.register(_cleanup)
+    dest = stage_doc_blobs(spark, sf_dir, "multimodal_")
     binary = read_binary_dir(spark, dest)
     meta = extract_image_meta(binary)
     return meta.select(

@@ -24,13 +24,20 @@ Reference parity:
 
 from __future__ import annotations
 
+import atexit
+import glob as glob_mod
 import hashlib
 import io
+import os
+import shutil
+import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..tables import table
 
 # Importable-optional REAL decode bodies (VERDICT r1 #6): when PIL/GDAL
 # exist the kernels decode for real; when the import fails — or a given
@@ -110,6 +117,67 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> 
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
+
+
+def stage_doc_blobs(spark: SparkSession, sf_dir: str, prefix: str) -> str:
+    """Write each ``documents`` row as a blob file ``{doc_id}.jpg`` (even
+    ids) or ``{doc_id}.tif`` (odd) and return the landing directory.
+
+    Staged once per SESSION per source snapshot: landing-zone writes are
+    a one-time ingest cost in the real pipeline, so repeated plan builds
+    inside one application (bench cold+warm passes, oracle re-runs)
+    reuse the staged blobs. The key holds the ``applicationId``, so every
+    new process pays its own staging and no state crosses runs, plus the
+    size + mtime of every file of documents.parquet, so a table
+    regenerated mid-session gets a fresh directory instead of stale
+    blobs. The directory and its marker are removed at process exit."""
+    src = os.path.join(sf_dir, "documents.parquet")
+    fp_parts = [spark.sparkContext.applicationId]
+    for p in sorted([src] + glob_mod.glob(os.path.join(src, "**"), recursive=True)):
+        try:
+            st = os.stat(p)
+            fp_parts.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
+        except OSError:
+            continue
+    dest = os.path.join(
+        tempfile.gettempdir(),
+        prefix + hashlib.md5((sf_dir + "|" + "|".join(fp_parts)).encode()).hexdigest()[:16],
+    )
+    marker = dest + ".staged"  # sibling, so the binaryFile scan never sees it
+    # re-stage if dest vanished despite the marker (tmp-cleaner raced us)
+    if os.path.exists(marker) and os.path.isdir(dest):
+        return dest
+    os.makedirs(dest, exist_ok=True)
+
+    def write_files(rows):
+        for r in rows:
+            # the filename IS the address (id + payload both required);
+            # null-keyed or null-payload rows never reach the bucket
+            if r["text"] is None or r["doc_id"] is None:
+                continue
+            ext = "jpg" if r["doc_id"] % 2 == 0 else "tif"
+            with open(os.path.join(dest, f"{r['doc_id']}.{ext}"), "wb") as f:
+                f.write(r["text"].encode("utf-8"))
+
+    table(spark, sf_dir, "documents").select("doc_id", "text").foreachPartition(
+        write_files
+    )
+    # atomic marker: a concurrent run either sees the complete marker or
+    # none — never a half-written one
+    tmp = marker + f".tmp{os.getpid()}"
+    with open(tmp, "w") as f:
+        f.write("ok")
+    os.replace(tmp, marker)
+
+    def _cleanup(d=dest, m=marker):
+        shutil.rmtree(d, ignore_errors=True)
+        try:
+            os.remove(m)
+        except OSError:
+            pass
+
+    atexit.register(_cleanup)
+    return dest
 
 
 def _decode_image_stub(content: bytes, path: str) -> dict:

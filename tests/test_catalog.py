@@ -77,6 +77,19 @@ def test_update_processed_img_merge(spark):
     assert store.catalog().count() == 4
 
 
+def test_update_processed_img_duplicate_ids(spark):
+    """Repeated ids flip their row once; they must not duplicate it."""
+    store = CatalogStore(spark, tempfile.mkdtemp())
+    run = store.start_run(PROCESO_INGEST)
+    store.insert_catalog(_rows(spark), run)
+    store.update_processed_img(10, [1, 1, 3])
+    rows = store.catalog().collect()
+    ids = [r["id"] for r in rows]
+    assert len(rows) == 4
+    assert sorted(ids) == [1, 2, 3, 4]
+    assert {r["id"] for r in rows if r["id_tipo_img"] == 10} == {1, 3}
+
+
 def test_update_is_versioned_snapshot(spark):
     """Copy-on-write MERGE: the update lands in a NEW snapshot; the old
     version stays readable (time travel) and the pointer names the new."""

@@ -1,4 +1,4 @@
-"""The min-label-contraction oracle CTE (queries._min_label_components_cte)
+"""The min-label-contraction oracle CTE (q02_geo._min_label_components_cte)
 must compute EXACT connected components — it replaced the O(ΣC²)
 recursive-CTE transitive closure (ADVICE r07), so its correctness now
 gates every components-family oracle. Ground truth: union-find.
@@ -14,7 +14,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from datalake_imagenes_georreferenciadas_spark.plans.queries import (
+from datalake_imagenes_georreferenciadas_spark.plans.q02_geo import (
     _min_label_components_cte,
 )
 

@@ -31,7 +31,7 @@ from tools.empty_input_sweep import SCHEMA_SF_DIR, build_empty_sf
 
 # The nine queries the first full empty-input sweep (r15) crashed on,
 # each now carrying an explicit empty-input posture. Keep in sync with
-# the fix sites in plans/queries.py.
+# the fix sites in the plans/q*.py registry segments.
 FIXED_IN_R15 = [
     "j_dynamic_partition_pruning",
     "s23_analyze_stats",

@@ -1,13 +1,12 @@
-"""Structural pins for the r17 mechanical split of plans/queries.py.
+"""Structural pins for the query registry and its segments.
 
-The 329 @register bodies moved verbatim into plans/q01_*.py … q13_*.py
-(q14+ hold post-split append-only additions)
-(prelude/helpers in plans/_qbase.py); plans/queries.py is the facade
-that imports the segments in the ORIGINAL registration order and keeps
-every previously-module-level name importable. These tests pin the
-invariants the split must never break: registry size, registration
-order stability (the driver's front-50 window is order-sensitive),
-facade re-exports, and single registration per name.
+The @register bodies live in plans/q01_*.py … q16_*.py (prelude/helpers
+in plans/_qbase.py; q14+ hold append-only additions). plans/queries.py
+imports the segments in their fixed registration order and holds the
+driver-window rotation; plan functions are imported from the segment
+that defines them. These tests pin registry size, registration order
+(the driver's front-50 window is order-sensitive), the absence of a
+re-export layer, and single registration per name.
 """
 
 from __future__ import annotations
@@ -22,6 +21,9 @@ PLANS = (
     / "datalake_imagenes_georreferenciadas_spark"
     / "plans"
 )
+
+# sha256 of the first 338 registered names, newline-joined (r20 registry).
+_ORDER_SHA256 = "41d74d06f4670eb462ce69ff86a7ab989189c8c1e7785e6680badae26bf748e8"
 
 
 def test_registry_size_and_oracle_parity():
@@ -53,9 +55,9 @@ def test_registration_order_head_is_stable():
 
 
 def test_registration_order_prefix_is_pinned():
-    """The whole registration order, not just its head, is pinned: the
-    sha256 of the first 338 names (the registry at r20). A prefix, so
-    appending a query stays legal; any reorder or removal fails."""
+    """The whole registration order, not just its head, is pinned by a
+    prefix hash, so appending a query stays legal; any reorder or
+    removal fails."""
     import hashlib
 
     from datalake_imagenes_georreferenciadas_spark.plans.queries import ORACLES, QUERIES
@@ -63,9 +65,7 @@ def test_registration_order_prefix_is_pinned():
     names = list(QUERIES)
     assert len(names) >= 338
     digest = hashlib.sha256("\n".join(names[:338]).encode()).hexdigest()
-    assert digest == (
-        "41d74d06f4670eb462ce69ff86a7ab989189c8c1e7785e6680badae26bf748e8"
-    )
+    assert digest == _ORDER_SHA256
     assert list(ORACLES) == names
 
 
@@ -86,9 +86,10 @@ def test_every_segment_registers_queries():
         assert registered_here, f"{s} registers nothing"
 
 
-def test_facade_reexports_previous_module_level_names():
-    """Names tests/tools historically imported from plans.queries must
-    keep resolving there after the split."""
+def test_queries_module_is_registry_api_only():
+    """plans.queries carries the registry API and the rotation, never
+    plan functions: no registered name resolves on it and it holds no
+    ``from .qNN import (...)`` re-export list."""
     from datalake_imagenes_georreferenciadas_spark.plans import queries as q
 
     for name in (
@@ -98,19 +99,40 @@ def test_facade_reexports_previous_module_level_names():
         "all_queries",
         "all_oracles",
         "_rotated",
-        "_norm_event_ts",
-        "_dsum",
-        "w9_trailing_array",
-        "dedup_simhash_pairs",
-        "f21_luhn_check",
-        "catalog_filtered_join",
+        "_driver_check_state",
     ):
         assert hasattr(q, name), name
+    assert not [n for n in q.QUERIES if hasattr(q, n)]
+    assert "from .q" not in (PLANS / "queries.py").read_text()
+
+
+def test_segment_first_import_keeps_registration_order():
+    """Importing a plan function straight from a late segment must not
+    let that segment register first."""
+    import subprocess
+
+    code = (
+        "import hashlib\n"
+        "from datalake_imagenes_georreferenciadas_spark.plans.q09_north_star"
+        " import dedup_corpus_chunks\n"
+        "from datalake_imagenes_georreferenciadas_spark.plans._qbase"
+        " import QUERIES\n"
+        "print(hashlib.sha256('\\n'.join(list(QUERIES)[:338]).encode())"
+        ".hexdigest())\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=PLANS.parent.parent,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip()
+    assert out == _ORDER_SHA256
 
 
 def test_registry_objects_are_shared_not_copied():
     """_qbase.QUERIES IS queries.QUERIES — segments register into the
-    one dict the facade re-exports (a copy would freeze the registry at
+    one dict plans.queries exposes (a copy would freeze the registry at
     import order of whoever imported first)."""
     from datalake_imagenes_georreferenciadas_spark.plans import _qbase, queries
 

@@ -25,16 +25,9 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from pyspark.sql import functions as F  # noqa: E402
-
-
-def materialize(df) -> int:
-    h = df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h"))
-    row = h.agg(F.bit_xor("__h").alias("__x"), F.count("*").alias("__n")).collect()[0]
-    return int(row["__n"])
-
 
 def main() -> None:
+    from bench import materialize
     from datalake_imagenes_georreferenciadas_spark.operators.dedup import (
         _exploded_shingles,
     )

@@ -162,7 +162,7 @@ ALLOWED_WIDE: dict[str, tuple[str, str]] = {
     # The r11-fixed per-block parser now sees the MERGE-side partial
     # block (Results [412]: the HLL register words) that the old 400-char
     # window regex missed. Adjudicated r12: after the r10 rewrite
-    # (distinct pairs first, queries.py a5_approx_distinct), the 412-col
+    # (distinct pairs first, q02_geo.py a5_approx_distinct), the 412-col
     # buffer exists once per l_returnflag GROUP (3 distinct values) per
     # map task — shuffle volume O(3 x tasks), a few KB regardless of
     # fact-table size. The bug this gate exists for was the SAME buffer
